@@ -1,7 +1,7 @@
 """Size-gated broadcast hint for DATA-GROWING build sides (VERDICT r5
 item #1).
 
-``tools/corpus_scaling.py`` measured the broadcast→shuffle phase
+``tools/scale_probe.py corpus`` measured the broadcast→shuffle phase
 change at a 40× corpus replication (SCALE.md): a static
 ``F.broadcast(...)`` hint on a frame whose cardinality grows with the
 data (an LM count table, a per-document length lookup, a per-user

@@ -1,6 +1,6 @@
 """Executed-plan walking + SQL-metric scraping, shared by every
 consumer that reads runtime numbers out of an adaptive plan (the
-window-waiver audit, the Z-order pruning test, the scaling probes).
+window-waiver audit, the Z-order pruning test, tools/scale_probe.py).
 One place to absorb a Spark version renaming a QueryStage node or a
 metric key — previously three near-identical recursive walkers.
 """
@@ -56,4 +56,20 @@ def scan_metric_sum(df, keys=("numFiles", "numOutputRows", "filesSize")) -> dict
             for k in keys:
                 if k in m:
                     out[k] = out.get(k, 0) + m[k]
+    return out
+
+
+def shuffle_totals(qe) -> dict:
+    """Shuffle bytes and records written, summed over every Exchange in
+    an executed QueryExecution's final plan — the figure that becomes
+    the network bill on a cluster."""
+    out = {"shuffle_bytes": 0, "shuffle_records": 0, "n_exchanges": 0}
+    for node in iter_nodes(qe.executedPlan()):
+        if "Exchange" not in node.nodeName():
+            continue
+        m = metrics(node)
+        if "shuffleBytesWritten" in m:
+            out["n_exchanges"] += 1
+            out["shuffle_bytes"] += int(m["shuffleBytesWritten"])
+            out["shuffle_records"] += int(m.get("shuffleRecordsWritten", 0))
     return out

@@ -2037,7 +2037,7 @@ def l68c_pruned_postings_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-3. This is the LINEAR-scale mode: candidate pairs per term
     <= R^2 regardless of df, so pair volume <= |vocab| * R^2 even
     when a fixed hot vocabulary makes the exact l68 join grow
-    quadratically (tools/sparse_scaling.py measures both modes under
+    quadratically (tools/scale_probe.py sparse measures both modes under
     hot-term replication; norms are recomputed over the PRUNED
     vectors, so the pruned index defines its own exact metric rather
     than approximating l68's). The truncation window partitions on

@@ -245,7 +245,7 @@ def l4f_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_freq") >= 2)
     )
     return (
-        # df_tbl is vocabulary-sized — DATA-GROWING (corpus_scaling
+        # df_tbl is vocabulary-sized — DATA-GROWING (scale_probe corpus
         # measured the broadcast→shuffle flip at 40×): size-gated
         tok.join(maybe_broadcast(df_tbl), "token")
         .groupBy("lang", "token")

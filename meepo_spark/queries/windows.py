@@ -1301,11 +1301,13 @@ def g26_hll_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_type = u.groupBy("event_type").agg(
         F.approx_count_distinct("user_id", 0.02).alias("apx")
     )
+    # the type sets are hinted: left to size estimates, AQE sometimes
+    # broadcast the (type, user) side of these nested-loop joins instead
     union_apx = (
-        a.join(b.select("t2").distinct(), F.col("t1") < F.col("t2"))
+        a.join(F.broadcast(b.select("t2").distinct()), F.col("t1") < F.col("t2"))  # bcast: fixed (event-type set)
         .select("t1", "t2", "user_id")
         .unionByName(
-            b.join(a.select("t1").distinct(), F.col("t1") < F.col("t2")).select(
+            b.join(F.broadcast(a.select("t1").distinct()), F.col("t1") < F.col("t2")).select(  # bcast: fixed (event-type set)
                 "t1", "t2", "user_id"
             )
         )

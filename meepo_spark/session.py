@@ -15,6 +15,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory holding the meepo_spark package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "meepo_spark",
@@ -55,4 +58,14 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # Python workers start in the JVM's working directory, so anything
+    # they unpickle by module reference (the DataSource class in
+    # sources/pyds.py) imports only when the session was started from
+    # the repo root. Put the package root on every worker's path; this
+    # also covers a session reused through getOrCreate, whose static
+    # spark.executorEnv.* confs would be ignored.
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_ROOT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([_PACKAGE_ROOT, *paths])
     return spark

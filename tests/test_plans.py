@@ -629,7 +629,7 @@ BENCH_REGRESSION_WAIVED: dict[str, str] = {
     "g11_weighted_median": "r4 bucketed_prefix_sum rewrite (1.33->~1.7s "
     "local) — the waiver audit measured the old per-flag window walking "
     "594k fact-sized rows; the banded shape wins 1.8-3.1x at 9.5-28.5M "
-    "rows (tools/prefix_scaling.py) and arbitrarily more on a cluster",
+    "rows (tools/scale_probe.py prefix) and arbitrarily more on a cluster",
     "l21_classifier_auc": "same r4 rewrite class (0.76->~1.1s local): "
     "score-band prefix sums replace a per-source window over "
     "near-unique scores that grew ~2 rows/doc",

@@ -1,6 +1,6 @@
 """Scaling-exponent regression gate (VERDICT r5 #5).
 
-The scaling probes (tools/*_scaling.py) measured their exponents once;
+The scale probes (tools/scale_probe.py) measured their exponents once;
 this gate re-measures the three cheapest shapes at TWO sizes on every
 test run and asserts the growth ratio stays inside a recorded band
 (SCALE.md §8), so a plan change that re-introduces a super-linear
@@ -17,9 +17,9 @@ box would flake (the r5 host-drift lesson)."""
 
 from __future__ import annotations
 
-import time
-
 import pyspark.sql.functions as F
+
+from tools.scale_probe import Stopwatch, growth, measure
 
 # ×4 input step; linear ops must stay under this wall-clock growth.
 GROWTH_STEP = 4
@@ -28,16 +28,6 @@ SMALL_N = 250_000
 # CommitLog: per-commit cost at version ~220 vs version ~20 (O(1)
 # modulo the full-state JSON reread, which is KB-sized here).
 COMMIT_BAND_MAX = 6.0
-
-
-def _force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def _timed(fn) -> float:
-    t0 = time.perf_counter()
-    fn()
-    return time.perf_counter() - t0
 
 
 def _enumeration_wall(spark, n: int) -> float:
@@ -51,16 +41,14 @@ def _enumeration_wall(spark, n: int) -> float:
     big.count()
     try:
         width = max(n // 256, 1)  # bucket count stays ~256 at any n
-        return _timed(
-            lambda: _force(
-                bucketed_row_number(
-                    big,
-                    F.floor(F.col("k") / width),
-                    [F.col("k").asc(), F.col("ln").asc()],
-                    out="rn",
-                )
+        return measure(
+            bucketed_row_number(
+                big,
+                F.floor(F.col("k") / width),
+                [F.col("k").asc(), F.col("ln").asc()],
+                out="rn",
             )
-        )
+        )["wall_s"]
     finally:
         big.unpersist()
 
@@ -80,31 +68,21 @@ def _prefix_wall(spark, n: int) -> float:
     big.count()
     try:
         width = max(n // 256, 1)
-        return _timed(
-            lambda: _force(
-                bucketed_prefix_sum(
-                    big,
-                    bucket=F.floor(F.col("cents") / width),
-                    order_cols=[F.col("cents").asc()],
-                    vals={"cumw": "w"},
-                    part_cols=["g"],
-                )
+        return measure(
+            bucketed_prefix_sum(
+                big,
+                bucket=F.floor(F.col("cents") / width),
+                order_cols=[F.col("cents").asc()],
+                vals={"cumw": "w"},
+                part_cols=["g"],
             )
-        )
+        )["wall_s"]
     finally:
         big.unpersist()
 
 
-def _growth(spark, wall_fn) -> float:
-    # small measured twice, min taken: the first run absorbs codegen
-    # for this plan shape so the ratio isn't inflated by warmup
-    small = min(wall_fn(spark, SMALL_N) for _ in range(2))
-    big = wall_fn(spark, SMALL_N * GROWTH_STEP)
-    return big / small
-
-
 def test_bucketed_enumeration_growth_stays_linear(spark):
-    ratio = _growth(spark, _enumeration_wall)
+    ratio = growth(lambda n: _enumeration_wall(spark, n), SMALL_N, GROWTH_STEP)
     assert ratio < LINEAR_BAND_MAX, (
         f"bucketed_row_number grew {ratio:.1f}x on a {GROWTH_STEP}x input — "
         "super-linear shape reintroduced? (SCALE.md §8 band)"
@@ -112,7 +90,7 @@ def test_bucketed_enumeration_growth_stays_linear(spark):
 
 
 def test_bucketed_prefix_sum_growth_stays_linear(spark):
-    ratio = _growth(spark, _prefix_wall)
+    ratio = growth(lambda n: _prefix_wall(spark, n), SMALL_N, GROWTH_STEP)
     assert ratio < LINEAR_BAND_MAX, (
         f"bucketed_prefix_sum grew {ratio:.1f}x on a {GROWTH_STEP}x input — "
         "super-linear shape reintroduced? (SCALE.md §8 band)"
@@ -120,7 +98,7 @@ def test_bucketed_prefix_sum_growth_stays_linear(spark):
 
 
 def test_commit_log_commit_cost_stays_flat(tmp_path):
-    """The eventstore_scaling claim (manifest commit O(1)): mean
+    """The eventstore scale-probe claim (manifest commit O(1)): mean
     per-commit wall over a 20-commit window must not grow past
     COMMIT_BAND_MAX between version ~20 and version ~220 — an O(n)
     commit (e.g. re-listing every data dir, rewriting per-epoch files)
@@ -130,10 +108,10 @@ def test_commit_log_commit_cost_stays_flat(tmp_path):
     log = CommitLog(str(tmp_path / "s"))
 
     def window(start: int) -> float:
-        t0 = time.perf_counter()
-        for e in range(start, start + 20):
-            log.commit(e, [f"data/epoch={e}"])
-        return (time.perf_counter() - t0) / 20
+        with Stopwatch() as t:
+            for e in range(start, start + 20):
+                log.commit(e, [f"data/epoch={e}"])
+        return t.s / 20
 
     early = window(0)
     for e in range(20, 200):
